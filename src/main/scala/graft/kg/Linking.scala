@@ -770,10 +770,9 @@ object Linking {
         .as("dbp_status")): _*)
   }
 
-  /** Full L-chain: Wikipedia → Wikidata → DBpedia (orchestrator order),
-    * assembling the nested node shape (SURVEY §1.1). */
-  /** Convenience overload: build the dictionary artifacts inline (tests;
-    * production/bench callers prepare + persist once and reuse). */
+  /** Full L-chain (see the main overload below), building the dictionary
+    * artifacts inline (tests; production/bench callers prepare + persist
+    * once and reuse). */
   def linkAll(
       spark: SparkSession,
       entities: DataFrame,
@@ -787,6 +786,8 @@ object Linking {
     linkAll(spark, entities,
       prepare(spark, wiki, redirects, wd, dbp, synonyms, cfg), scrapes, cfg)
 
+  /** Full L-chain: Wikipedia → Wikidata → DBpedia (orchestrator order),
+    * assembling the nested node shape (SURVEY §1.1). */
   def linkAll(
       spark: SparkSession,
       entities: DataFrame,

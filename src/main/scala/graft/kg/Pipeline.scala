@@ -2,6 +2,7 @@ package graft.kg
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end KG construction: pages → extract → link → relate →
   * canonicalize → materialize (north_star stage graph; reference lifecycle
@@ -27,8 +28,14 @@ object Pipeline {
       wdDesc: Map[String, String],
       idf: Map[String, Double])
 
-  /** `release()` unpersists every plan this run cached (docOut, edges,
-    * flat nodes, statistics caches) — call it once the outputs are
+  /** The four outputs of a run. Both run modes build them with the same
+    * stage graph, the same scrape placement ([[linkInputs]]) and the same
+    * canonicalization input ([[ccInput]]); they differ only in how a stage
+    * is kept: [[run]] persists it in memory, [[runMaterialized]] writes it
+    * through [[KgTables.write]] and returns the re-read tables.
+    *
+    * `release()` unpersists every plan [[run]] cached (docOut, edges, flat
+    * nodes, the statistics counter cache) — call it once the outputs are
     * materialized. The ONE block it deliberately excludes is the
     * localCheckpoint backing `components` (its lineage is truncated, so
     * dropping it would make the returned DataFrame unreadable; CC's
@@ -58,8 +65,6 @@ object Pipeline {
       idf = lt.idf)
   }
 
-  /** In-memory run (tests, benchmarks): no table layer, returns the live
-    * DataFrames. `useHtml=true` exercises the extract_text invariant path. */
   /** Dictionary artifacts for the link stage, built once per deployment
     * (static data) and reusable across runs; persisted AND materialized so
     * later runs never pay the build. */
@@ -71,121 +76,99 @@ object Pipeline {
     p
   }
 
+  /** Scrape placement: maps the extract output to the link stage's
+    * `(entities, scrapes)` inputs.
+    *
+    * Broadcast regime (the small-dictionary gate outcome): each entity row
+    * carries its document's `p_extract` (the L5 scrape text) — zero L5
+    * join, zero shuffle, and no fat column ever moves (broadcast joins
+    * don't shuffle the probe); the text is duplicated per entity (~3x) in
+    * exchange, and there is no scrapes input.
+    * Salted regime (forceSaltedJoins — the at-scale shape where every
+    * dictionary exceeds the broadcast budget): every dictJoin SHUFFLES the
+    * probe side, so carrying the page text would drag it through all nine
+    * salted exchanges. There the entity rows stay NARROW and the text is
+    * kept once per page, re-attached by ONE unsalted shuffle-hash join at
+    * L5 (Linking.wikipedia compat path) — it crosses the wire exactly once. */
+  private def linkInputs(docOut: DataFrame, cfg: KgConfig)
+      : (DataFrame, Option[DataFrame]) = {
+    val pExtract = when(length(col("scrape")) > 0, col("scrape")).as("p_extract")
+    if (cfg.forceSaltedJoins)
+      (docOut.select(explode(col("entities")).as("e")).select("e.*"),
+        Some(docOut.select(col("url").as("p_url"), pExtract)))
+    else
+      (docOut.select(pExtract, explode(col("entities")).as("e"))
+        .select(col("e.*"), col("p_extract")), None)
+  }
+
+  /** Canonicalization input: alias → canonical and redirect edges. */
+  private def ccInput(spark: SparkSession, dicts: Dicts): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(dicts.aliases.map(a => (a.alias, a.canonical)))
+      .toDF("src", "dst")
+      .union(dicts.redirects.select(col("from_title").as("src"),
+        col("to_title").as("dst")))
+  }
+
+  /** In-memory run (tests, benchmarks): no table layer; every stage is
+    * kept by an in-memory persist and the live DataFrames are returned. */
   def run(
       spark: SparkSession,
       pages: Dataset[PageRow],
       dicts: Dicts,
       cfg: KgConfig = KgConfig.default,
       runId: String = "local",
-      useHtml: Boolean = true,
-      prepared: Option[Linking.Prepared] = None,
-      cacheNodes: Boolean = true): Result = {
-    import spark.implicits._
-
+      prepared: Option[Linking.Prepared] = None): Result = {
     // ---- extract stage: fused map pass (E1-E3, R1-R4, D3, D6) ----
     // Cached as a DATAFRAME, not a typed Dataset: typed flatMap would
     // deserialize the whole DocOut row (including the fat scrape column)
     // in every consumer, while InMemoryRelation + Catalyst explode prunes
     // each branch to exactly the columns it reads.
-    val docOutAll = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, cfg, useHtml, dicts.wdDesc, idf = Some(dicts.idf))
+    val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
+      dicts.wdPartOf, cfg, dicts.wdDesc, idf = Some(dicts.idf))
       .toDF()
-    // SPARK_GRAFT_SPLIT_SCRAPE=1 (plan-variant probe, VERDICT r4 item 2a):
-    // drop the 1200-char scrape column from the docOut cache fill and let
-    // the link stage re-run the extract pass for its one p_extract read —
-    // trades a second extract execution for a narrower (cheaper-to-fill)
-    // cache. Measured r5 at 360k pages: LOSES at both thread counts (the
-    // fused extract costs more than caching the text; see PLANS.md), so
-    // the default keeps scrape in the cache.
-    val splitScrape = sys.env.get("SPARK_GRAFT_SPLIT_SCRAPE").contains("1")
-    val docOut = (if (splitScrape) docOutAll.drop("scrape") else docOutAll)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // edges are persisted NARROW: the statistics passes scan them twice
     val edges = docOut.select(explode(col("triples")).as("t")).select("t.*")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
     // ---- link stage: Wikipedia → Wikidata → DBpedia dictionary joins ----
-    // The link input is an UNCACHED projection straight off the docOut
-    // cache: the gated single-pass chain consumes it exactly once, so a
+    // The link inputs are UNCACHED projections straight off the docOut
+    // cache: the gated single-pass chain consumes them exactly once, so a
     // second (entities) cache would only add a BlockManager round-trip —
     // the round-2 scaling profile showed cache fill/read as the bound.
-    //
-    // Broadcast regime (the small-dictionary gate outcome): each entity
-    // row carries its document's `p_extract` (the L5 scrape text) from the
-    // same cached docOut row — zero L5 join, zero shuffle, and no fat
-    // column ever moves (broadcast joins don't shuffle the probe).
-    // Salted regime (forceSaltedJoins — the at-scale shape where every
-    // dictionary exceeds the broadcast budget): every dictJoin SHUFFLES
-    // the probe side, so carrying the full page text would drag it through
-    // all nine salted exchanges. There the entity rows stay NARROW and the
-    // scrape text is re-attached by ONE unsalted shuffle-hash join at L5
-    // (Linking.wikipedia compat path) — the html-derived text crosses the
-    // wire exactly once.
     val rec = new Linking.JoinRecorder
-    val carryScrape = !cfg.forceSaltedJoins
-    // under the split-scrape probe the text column is not in the cache —
-    // the link-stage projections read the UNCACHED extract plan instead
-    val docWithScrape = if (splitScrape) docOutAll else docOut
-    val entities =
-      if (carryScrape)
-        docWithScrape.select(
-            when(length(col("scrape")) > 0, col("scrape")).as("p_extract"),
-            explode(col("entities")).as("e"))
-          .select(col("e.*"), col("p_extract"))
-      else docOut.select(explode(col("entities")).as("e")).select("e.*")
-    val scrapes =
-      if (carryScrape) spark.emptyDataFrame
-      else docWithScrape.select(col("url").as("p_url"),
-        when(length(col("scrape")) > 0, col("scrape")).as("p_extract"))
+    val (entities, scrapes) = linkInputs(docOut, cfg)
     val prep = prepared.getOrElse(
       Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
         dicts.synonyms, cfg, rec))
-    // nodes are persisted by default: statistics runs several aggregates
-    // over them and must not re-execute the join chain per aggregate (at
-    // scale this stage is written to a table first — runMaterialized —
-    // which serves the same purpose). The cache holds the FLAT link output
-    // (Linking.linkFlat) with the nested user shape assembled on top: the
-    // in-memory cache prunes only top-level columns and stores structs as
-    // opaque blobs, so caching the nested shape made every statistics read
-    // decompress the full fat payload (measured 3-4× slower narrow fill at
-    // local[32]). `cacheNodes=false` is for consumers that only
-    // materialize `metrics`: statistics then reads the link plan
-    // COLUMN-PRUNED through the broadcast joins (the fat extract/multilang
-    // payload is never computed or stored), with its own narrow persist
-    // deduplicating the four passes.
-    val flatPlan = Linking.linkFlat(spark, entities, prep, scrapes, cfg, rec)
-    val nodes = Linking.nest(
-      if (cacheNodes)
-        flatPlan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else flatPlan)
+    // nodes are persisted: statistics runs several aggregates over them and
+    // must not re-execute the join chain per aggregate (runMaterialized's
+    // table write serves the same purpose). The cache holds the FLAT link
+    // output (Linking.linkFlat) with the nested user shape assembled on
+    // top: the in-memory cache prunes only top-level columns and stores
+    // structs as opaque blobs, so caching the nested shape made every
+    // statistics read decompress the full fat payload (measured 3-4×
+    // slower narrow fill at local[32]).
+    val flat = Linking.linkFlat(spark, entities, prep,
+      scrapes.getOrElse(spark.emptyDataFrame), cfg, rec)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = Linking.nest(flat)
 
     // ---- canonicalize: connected components over alias/redirect edges ----
-    val aliasEdges = spark.createDataset(dicts.aliases.map(a => (a.alias, a.canonical))).toDF("src", "dst")
-    val redirectEdges = dicts.redirects.select(col("from_title").as("src"), col("to_title").as("dst"))
-    val components = ConnectedComponents.run(spark, aliasEdges.union(redirectEdges))
+    val components = ConnectedComponents.run(spark, ccInput(spark, dicts))
 
     // ---- statistics + lineage metrics ----
     // dictJoin path decisions (broadcast vs salted, with the size evidence)
     // are recorded at plan-construction time — surfaced as metric rows so
     // plan drift at scale is observable in the run output, not just in
     // executor logs
-    // cacheNarrow=false (round 6): the narrow stats persist predates the
-    // flat nodes cache and became pure double-caching — only ONE pass
-    // (counters) reads the fat array columns, so re-encoding them into a
-    // second cache costs more than the single pruned flat-cache read it
-    // saves. Interleaved A/B at 1.08M pages/local[32] (default → off →
-    // default, one window): stats 6.6/5.9 → 5.0/4.1 → 6.5/6.0 s; whole
-    // job 33.3/29.2 → 30.1/26.8 → 32.4/29.1 s. SPARK_GRAFT_STATS_NARROW=1
-    // re-enables the persist for future re-probes.
     val (stats, statsCaches) = Statistics.computeTracked(spark, nodes, edges,
-      runId,
-      cacheNarrow = sys.env.get("SPARK_GRAFT_STATS_NARROW").contains("1"))
+      runId)
     val metrics = stats.unionByName(joinDecisionRows(spark, runId, rec))
 
-    val cached: Seq[DataFrame] =
-      Seq(docOut, edges) ++ (if (cacheNodes) Seq(flatPlan) else Nil) ++
-        statsCaches
+    val cached = Seq(docOut, edges, flat) ++ statsCaches
     Result(nodes, edges, components, metrics,
       release = () => cached.foreach(_.unpersist()))
   }
@@ -234,33 +217,17 @@ object Pipeline {
     val fp = fingerprintOf(pages, cfg)
 
     val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, cfg, useHtml = true, descByQid = dicts.wdDesc,
-      idf = Some(dicts.idf))
-    // Scrape placement mirrors Pipeline.run's regime split (see the link
-    // stage comment there). Broadcast regime: each entity row CARRIES its
-    // document's L5 text in kg_entities — no kg_scrapes table (one fewer
-    // full-corpus-width stage write AND one fewer extract pass over the
-    // html), no L5 join downstream; the text is duplicated per entity
-    // (~3x) in exchange. Salted regime: kg_entities stays NARROW (the
-    // probe rows cross every salted exchange) and the text is written ONCE
-    // to kg_scrapes, re-attached by the single unsalted L5 join.
-    val carryScrape = !cfg.forceSaltedJoins
-    val entities = tables.write(
-      if (carryScrape)
-        docOut.toDF().select(
-            when(length(col("scrape")) > 0, col("scrape")).as("p_extract"),
-            explode(col("entities")).as("e"))
-          .select(col("e.*"), col("p_extract"))
-      else docOut.flatMap(_.entities).toDF(),
+      dicts.wdPartOf, cfg, dicts.wdDesc, idf = Some(dicts.idf))
+    // scrape placement as in run (see linkInputs): the broadcast regime
+    // writes no kg_scrapes table — one fewer full-corpus-width stage write
+    // AND one fewer extract pass over the html
+    val (entityRows, scrapeRows) = linkInputs(docOut.toDF(), cfg)
+    val entities = tables.write(entityRows,
       "kg_entities", runId, "extract_entities", fp)
     val edgesRaw = tables.write(docOut.flatMap(_.triples).toDF(), "kg_edges",
       runId, "extract_edges", fp, partitionBy = Seq("inferred"))
-    val scrapes =
-      if (carryScrape) spark.emptyDataFrame
-      else tables.write(
-        docOut.toDF().select(col("url").as("p_url"),
-          when(length(col("scrape")) > 0, col("scrape")).as("p_extract")),
-        "kg_scrapes", runId, "extract_scrapes", fp)
+    val scrapes = scrapeRows.fold(spark.emptyDataFrame)(
+      tables.write(_, "kg_scrapes", runId, "extract_scrapes", fp))
 
     val rec = new Linking.JoinRecorder
     val nodes = tables.write(
@@ -270,14 +237,12 @@ object Pipeline {
         scrapes, cfg, rec),
       "kg_nodes", runId, "link", fp)
 
-    val aliasEdges = spark.createDataset(dicts.aliases.map(a => (a.alias, a.canonical))).toDF("src", "dst")
-    val redirectEdges = dicts.redirects.select(col("from_title").as("src"), col("to_title").as("dst"))
     val components = tables.write(
-      ConnectedComponents.run(spark, aliasEdges.union(redirectEdges)),
+      ConnectedComponents.run(spark, ccInput(spark, dicts)),
       "kg_components", runId, "canonicalize", fp)
 
     val metrics = tables.write(
-      Statistics.compute(spark, nodes, edgesRaw, runId, cacheNarrow = false)
+      Statistics.compute(spark, nodes, edgesRaw, runId)
         .unionByName(tables.partitionLineage(edgesRaw, runId, "extract_edges"))
         .unionByName(joinDecisionRows(spark, runId, rec)),
       "kg_metrics", runId, "metrics", fp)

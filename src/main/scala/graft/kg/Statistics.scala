@@ -29,38 +29,22 @@ import org.apache.spark.sql.functions._
   */
 object Statistics {
 
-  /** `cacheNarrow`: persist the narrow node projection (right when the
-    * input is an in-memory fat cache — branch scans would decompress the
-    * fat columns each time); pass false when nodes come from parquet,
-    * where column pruning already makes repeated scans cheap. */
   def compute(spark: SparkSession, nodesFull: DataFrame, edges: DataFrame,
-      runId: String, cacheNarrow: Boolean = true): DataFrame =
-    computeTracked(spark, nodesFull, edges, runId, cacheNarrow)._1
+      runId: String): DataFrame =
+    computeTracked(spark, nodesFull, edges, runId)._1
 
   /** Like [[compute]], but also returns the plans this call PERSISTED
-    * (the narrow node projection when `cacheNarrow`, and the tiny grouped
-    * counter table), so the caller can unpersist them once the metrics are
-    * materialized — compute() itself cannot: the returned plan is lazy and
-    * the caches exist precisely to serve its eventual execution. Callers
-    * that invoke compute repeatedly in one session (bench reps, per-query
-    * oracles) must release, or each call leaks its caches for the session
-    * lifetime. */
+    * (the tiny grouped counter table), so the caller can unpersist them
+    * once the metrics are materialized — compute() itself cannot: the
+    * returned plan is lazy and the cache exists precisely to serve its
+    * eventual execution. Callers that invoke compute repeatedly in one
+    * session (bench reps, per-query oracles) must release, or each call
+    * leaks its cache for the session lifetime. The node projection is NOT
+    * persisted: only one pass (counters) reads the fat array columns, so
+    * re-encoding them into a second cache costs more than the single
+    * pruned read of the caller's node cache or parquet it saves. */
   def computeTracked(spark: SparkSession, nodesFull: DataFrame,
-      edges: DataFrame, runId: String, cacheNarrow: Boolean = true)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (ps, caches) = passes(spark, nodesFull, edges, cacheNarrow)
-    val df = ps.map(_._2)
-      .reduce(_.unionByName(_))
-      .select(lit(runId).as("run_id"), lit("stats").as("stage"),
-        col("metric"), col("key"), col("value"))
-    (df, caches)
-  }
-
-  /** The branch plans of the metrics union, individually addressable
-    * for per-pass scaling probes (StatsProbe), plus the persisted plans. */
-  private[kg] def passes(spark: SparkSession, nodesFull: DataFrame,
-      edges: DataFrame, cacheNarrow: Boolean)
-      : (Seq[(String, DataFrame)], Seq[DataFrame]) = {
+      edges: DataFrame, runId: String): (DataFrame, Seq[DataFrame]) = {
 
     // Every array is coalesced HERE: pass 2 concat()s them into one explode,
     // and Spark's concat returns NULL if ANY input array is NULL — a single
@@ -77,7 +61,7 @@ object Statistics {
     def dbpArr(c: Column): Column =
       when(col("sources.dbpedia.status") === "linked", arr(c))
         .otherwise(array().cast("array<string>"))
-    val narrow = nodesFull.select(
+    val nodes = nodesFull.select(
       col("details.typ").as("typ"),
       col("details.inferred").as("ent_inferred"),
       col("sources.wikipedia.status").as("wp_status"),
@@ -96,9 +80,6 @@ object Statistics {
       dbpArr(col("sources.dbpedia.subjects")).as("dbp_subjects"),
       dbpArr(col("sources.dbpedia.part_of")).as("dbp_partof"),
       dbpArr(col("sources.dbpedia.has_part")).as("dbp_haspart"))
-    val nodes = if (cacheNarrow)
-      narrow.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else narrow
 
     def row(metric: Column, key: Column, value: Column): Column =
       struct(metric.cast("string").as("metric"), key.cast("string").as("key"),
@@ -250,7 +231,10 @@ object Statistics {
       .select(row(lit("total"), lit("relationships"), col("c")).as("m"))
       .select("m.*")
 
-    (Seq("linked" -> linked, "counters" -> counters, "relTotal" -> relTotal),
-      (if (cacheNarrow) Seq(nodes) else Nil) :+ grouped)
+    val df = Seq(linked, counters, relTotal)
+      .reduce(_.unionByName(_))
+      .select(lit(runId).as("run_id"), lit("stats").as("stage"),
+        col("metric"), col("key"), col("value"))
+    (df, Seq(grouped))
   }
 }

@@ -241,7 +241,8 @@ object TextUtils extends Serializable {
     * pass, so the digest object is thread-local and the hex encoding is a
     * table lookup — the original per-call getInstance + per-byte format
     * string was ~9 µs/call and the single largest CPU item of the whole
-    * extract stage (ExtractProfile, round 6). */
+    * extract stage in a single-threaded per-component profile (round 6;
+    * findings in OPTIMIZATION_r06.md). */
   private val HexChars = "0123456789abcdef".toCharArray
   private val Sha1Local =
     new ThreadLocal[java.security.MessageDigest] {

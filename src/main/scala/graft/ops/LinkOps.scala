@@ -172,8 +172,7 @@ object LinkOps {
     val edges = Seq.empty[(String, String, String, String)]
       .toDF("subject", "predicate", "object", "inferred")
     val (stats, caches) =
-      graft.kg.Statistics.computeTracked(spark, nodes, edges, "driver",
-        cacheNarrow = false)
+      graft.kg.Statistics.computeTracked(spark, nodes, edges, "driver")
     // the returned plan is lazy (Verify materializes it later), so the
     // caches created by THIS call cannot be released here — instead each
     // call releases its predecessor's, bounding repeated invocations to

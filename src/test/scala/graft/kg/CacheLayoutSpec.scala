@@ -44,7 +44,7 @@ class CacheLayoutSpec extends SparkSpec {
 
   test("the statistics metrics plan itself never scans the fat columns") {
     val metricsOverNodes = Statistics.compute(
-      spark, result.nodes, result.edges, "probe", cacheNarrow = false)
+      spark, result.nodes, result.edges, "probe")
     val out = imrScanOutputs(metricsOverNodes)
     for (fat <- Seq("wiki_extract", "wiki_multilang", "dbp_abstract", "wd_descriptions"))
       assert(!out.contains(fat),

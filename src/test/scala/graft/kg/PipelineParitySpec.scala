@@ -50,6 +50,38 @@ class PipelineParitySpec extends SparkSpec {
     assert(e1 == e2, "edge parity broadcast vs salted")
   }
 
+  test("run and runMaterialized agree on edges, node keys and statistics in both regimes") {
+    val small = SyntheticCorpus.generate(nPages = 60, seed = 42L)
+    val pages = spark.createDataset(small.pages).repartition(4)
+    val dicts = Pipeline.dictsFromCorpus(spark, small)
+    def edges(r: Pipeline.Result) = r.edges
+      .select("url", "subject", "predicate", "object", "inferred", "subject_id")
+      .as[(String, String, String, String, String, String)].collect().toSeq
+      .sortBy(_.toString)
+    def nodes(r: Pipeline.Result) = r.nodes.select(
+      $"url", $"entity", $"sources.wikipedia.status", $"sources.wikidata.status",
+      $"sources.dbpedia.status", $"sources.wikipedia.fallback_source",
+      $"sources.dbpedia.fallback_source")
+      .as[(String, String, String, String, String, String, String)].collect().toSeq
+      .sortBy(_.toString)
+    def stats(r: Pipeline.Result) = r.metrics.filter($"stage" === "stats")
+      .select("metric", "key", "value").as[(String, String, Double)].collect().toSeq
+      .sortBy(_.toString)
+    for (regime <- Seq(cfg, cfg.copy(forceSaltedJoins = true, nSalt = 4))) {
+      val name = if (regime.forceSaltedJoins) "salted" else "broadcast"
+      val mem = Pipeline.run(spark, pages, dicts, regime)
+      val tables = new KgTables(spark,
+        java.nio.file.Files.createTempDirectory(s"kg_modes_$name").toString)
+      val mat = Pipeline.runMaterialized(spark, pages, dicts, tables, regime)
+      val memEdges = edges(mem)
+      assert(memEdges.nonEmpty)
+      assert(edges(mat) == memEdges, s"edges differ between run modes ($name)")
+      assert(nodes(mat) == nodes(mem), s"node keys differ between run modes ($name)")
+      assert(stats(mat) == stats(mem), s"stats rows differ between run modes ($name)")
+      mem.release()
+    }
+  }
+
   test("entity caps hold: <= MAX_ENTITIES per doc, triples within entity set") {
     val perDoc = result.nodes.groupBy("url").count().agg(max("count")).head().getLong(0)
     assert(perDoc <= cfg.maxEntities)

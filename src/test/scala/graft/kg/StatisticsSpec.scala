@@ -55,7 +55,7 @@ class StatisticsSpec extends SparkSpec {
       ("b", "mag", "c", "explicit"),
       ("a", "ist teil von", "c", "implicit")))
       .toDF("subject", "predicate", "object", "inferred")
-    Statistics.compute(spark, nodes, edges, "t", cacheNarrow = false)
+    Statistics.compute(spark, nodes, edges, "t")
       .collect().map(r => (r.getString(2), r.getString(3)) -> r.getDouble(4))
       .toMap
   }

@@ -41,7 +41,7 @@ class TrainingSinkSpec extends SparkSpec {
     val dicts = Pipeline.dictsFromCorpus(spark, corpus)
     val cnt = KgExtract.Counters(spark)
     val out = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, KgConfig.default, useHtml = true,
+      dicts.wdPartOf, KgConfig.default,
       descByQid = dicts.wdDesc, counters = Some(cnt))
     val nEnts = out.flatMap(_.entities).count()
     assert(cnt.pages.value == 30)
