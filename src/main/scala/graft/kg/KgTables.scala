@@ -35,10 +35,11 @@ final class KgTables(spark: SparkSession, root: String) {
 
   /** Write a stage output + manifest row. Returns the re-read DataFrame so
     * downstream stages scan pruned parquet instead of recomputing lineage.
-    * The manifest row count comes from `df.observe()` captured DURING the
-    * write — a post-write re-read + count() would be a full extra scan of
-    * every stage output per run. */
-  def write(df: DataFrame, name: String, runId: String, stage: String,
+    * `df` is taken by name: a stage that is already done only reads its
+    * table and never builds the plan. The manifest row count comes from
+    * `df.observe()` captured DURING the write — a post-write re-read +
+    * count() would be a full extra scan of every stage output per run. */
+  def write(df: => DataFrame, name: String, runId: String, stage: String,
       fingerprint: String, partitionBy: Seq[String] = Nil): DataFrame = {
     if (isDone(runId, stage, fingerprint)) return read(name)
     val obs = org.apache.spark.sql.Observation(s"rows_${name}_${System.nanoTime()}")
@@ -86,16 +87,5 @@ final class KgTables(spark: SparkSession, root: String) {
             coalesce(col("p_extract"), lit(""))).as("content")),
         struct(lit("assistant").as("role"), col("assistant").as("content"))).as("messages"))
       .write.mode("overwrite").json(path(name))
-  }
-
-  /** Per-partition lineage rows (north_rule): partition id → row count for a
-    * written table, recorded into the metrics table. */
-  def partitionLineage(df: DataFrame, runId: String, stage: String): DataFrame = {
-    import spark.implicits._
-    df.select(spark_partition_id().as("pid"))
-      .groupBy("pid").agg(count(lit(1)).as("rows"))
-      .select(lit(runId).as("run_id"), lit(stage).as("stage"),
-        lit("partition_rows").as("metric"), col("pid").cast("string").as("key"),
-        col("rows").cast("double").as("value"))
   }
 }

@@ -770,9 +770,10 @@ object Linking {
         .as("dbp_status")): _*)
   }
 
-  /** Full L-chain (see the main overload below), building the dictionary
-    * artifacts inline (tests; production/bench callers prepare + persist
-    * once and reuse). */
+  /** Full L-chain: Wikipedia → Wikidata → DBpedia (orchestrator order),
+    * building the dictionary artifacts inline and assembling the nested
+    * node shape (SURVEY §1.1) — utility and test callers; the pipeline
+    * prepares once and keeps the [[linkFlat]] output. */
   def linkAll(
       spark: SparkSession,
       entities: DataFrame,
@@ -783,32 +784,22 @@ object Linking {
       scrapes: DataFrame,
       synonyms: DataFrame,
       cfg: KgConfig): DataFrame =
-    linkAll(spark, entities,
-      prepare(spark, wiki, redirects, wd, dbp, synonyms, cfg), scrapes, cfg)
-
-  /** Full L-chain: Wikipedia → Wikidata → DBpedia (orchestrator order),
-    * assembling the nested node shape (SURVEY §1.1). */
-  def linkAll(
-      spark: SparkSession,
-      entities: DataFrame,
-      prep: Prepared,
-      scrapes: DataFrame,
-      cfg: KgConfig,
-      rec: JoinRecorder = JoinRecorder.noop): DataFrame =
-    nest(linkFlat(spark, entities, prep, scrapes, cfg, rec))
+    nest(linkFlat(spark, entities,
+      prepare(spark, wiki, redirects, wd, dbp, synonyms, cfg), scrapes, cfg))
 
   /** The link chain with a FLAT output schema: one top-level column per
-    * node field. This is the form Pipeline.run CACHES: Spark's in-memory
-    * columnar cache prunes TOP-LEVEL columns only, and complex struct
-    * columns are stored as opaque per-row byte blobs (no per-field
-    * compression, no field pruning) — caching the nested shape forced
-    * every statistics read to decompress the entire fat payload (extracts,
-    * multilang maps) just to reach a status column; measured 3-4× slower
-    * narrow-fill at local[32] than the flat layout. `nest` assembles the
-    * user-facing nested shape ON TOP of the cache read — Catalyst
-    * collapses `sources.wikipedia.status` through the nesting projection
-    * back to the flat column (SimplifyExtractValueOps), so consumers of a
-    * few fields scan only those columns. */
+    * node field. This is the form both pipeline run modes keep
+    * (Pipeline.run caches it, runMaterialized writes it as kg_nodes):
+    * Spark's in-memory columnar cache prunes TOP-LEVEL columns only, and
+    * complex struct columns are stored as opaque per-row byte blobs (no
+    * per-field compression, no field pruning) — caching the nested shape
+    * forced every statistics read to decompress the entire fat payload
+    * (extracts, multilang maps) just to reach a status column; measured
+    * 3-4× slower narrow-fill at local[32] than the flat layout. `nest`
+    * assembles the user-facing nested shape ON TOP of the cache or table
+    * read — Catalyst collapses `sources.wikipedia.status` through the
+    * nesting projection back to the flat column (SimplifyExtractValueOps),
+    * so consumers of a few fields scan only those columns. */
   def linkFlat(
       spark: SparkSession,
       entities: DataFrame,

@@ -3,6 +3,7 @@ package graft.kg
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable
 
 /** End-to-end KG construction: pages → extract → link → relate →
   * canonicalize → materialize (north_star stage graph; reference lifecycle
@@ -28,22 +29,26 @@ object Pipeline {
       wdDesc: Map[String, String],
       idf: Map[String, Double])
 
-  /** The four outputs of a run. Both run modes build them with the same
-    * stage graph, the same scrape placement ([[linkInputs]]) and the same
-    * canonicalization input ([[ccInput]]); they differ only in how a stage
-    * is kept: [[run]] persists it in memory, [[runMaterialized]] writes it
+  /** The four outputs of a run. [[run]] and [[runMaterialized]] build them
+    * with ONE stage list: the same single extract pass, scrape placement
+    * ([[linkInputs]]), flat link output with [[Linking.nest]] as the one
+    * nested view on top, canonicalization input ([[ccInput]]) and metrics
+    * (statistics ∪ partition lineage of the edges ∪ `link_plan` rows). The
+    * modes differ only in how a stage is kept: [[run]] persists the frames
+    * later stages read more than once, [[runMaterialized]] writes each stage
     * through [[KgTables.write]] and returns the re-read tables.
     *
-    * `release()` unpersists every plan [[run]] cached (docOut, edges, flat
+    * `release()` unpersists every plan the call cached (docOut, edges, flat
     * nodes, the statistics counter cache) — call it once the outputs are
-    * materialized. The ONE block it deliberately excludes is the
-    * localCheckpoint backing `components` (its lineage is truncated, so
-    * dropping it would make the returned DataFrame unreadable; CC's
-    * intermediate checkpoints clean themselves up). Callers that
-    * bulk-clean via a getPersistentRDDs diff (bench reps, the streaming
-    * foreachBatch) additionally reclaim that final block. Default no-op
-    * keeps runMaterialized (which caches nothing — every stage is
-    * table-backed) and test constructions unchanged. */
+    * materialized. With tables those caches are already dropped as soon as
+    * the tables that read them are written, so it frees nothing more there.
+    * The ONE block it deliberately excludes is the localCheckpoint backing
+    * an in-memory `components` (its lineage is truncated, so dropping it
+    * would make the returned DataFrame unreadable; CC's intermediate
+    * checkpoints clean themselves up). Callers that bulk-clean via a
+    * getPersistentRDDs diff (bench reps, the streaming foreachBatch)
+    * additionally reclaim that final block. The default no-op serves test
+    * constructions. */
   final case class Result(nodes: DataFrame, edges: DataFrame,
       components: DataFrame, metrics: DataFrame,
       release: () => Unit = () => ())
@@ -110,67 +115,113 @@ object Pipeline {
         col("to_title").as("dst")))
   }
 
-  /** In-memory run (tests, benchmarks): no table layer; every stage is
-    * kept by an in-memory persist and the live DataFrames are returned. */
+  /** In-memory run (tests, benchmarks): no table layer; the live
+    * DataFrames are returned. */
   def run(
       spark: SparkSession,
       pages: Dataset[PageRow],
       dicts: Dicts,
       cfg: KgConfig = KgConfig.default,
       runId: String = "local",
-      prepared: Option[Linking.Prepared] = None): Result = {
-    // ---- extract stage: fused map pass (E1-E3, R1-R4, D3, D6) ----
+      prepared: Option[Linking.Prepared] = None): Result =
+    stages(spark, pages, dicts, cfg, runId, prepared, tables = None)
+
+  /** Materializing run with snapshot/resume (SURVEY §7.4): each stage writes
+    * parquet + manifest; a rerun with the same runId skips completed stages
+    * without building their plans. */
+  def runMaterialized(
+      spark: SparkSession,
+      pages: Dataset[PageRow],
+      dicts: Dicts,
+      tables: KgTables,
+      cfg: KgConfig = KgConfig.default,
+      runId: String = "run1"): Result =
+    stages(spark, pages, dicts, cfg, runId, prepared = None, Some(tables))
+
+  /** The stage list of both run modes: extract → link → canonicalize →
+    * metrics. The mode decides only how a stage is kept (`keep`) and, with
+    * tables, that a cache is dropped once the tables reading it are
+    * written. */
+  private def stages(
+      spark: SparkSession,
+      pages: Dataset[PageRow],
+      dicts: Dicts,
+      cfg: KgConfig,
+      runId: String,
+      prepared: Option[Linking.Prepared],
+      tables: Option[KgTables]): Result = {
+    val cached = mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = {
+      cached += df.persist(StorageLevel.MEMORY_AND_DISK)
+      df
+    }
+    def release(): Unit = { cached.foreach(_.unpersist()); cached.clear() }
+    lazy val fp = fingerprintOf(pages, cfg)
+    /** Keeps one stage's output. With tables: written through
+      * [[KgTables.write]], which evaluates `body` only for a stage that is
+      * not done yet, and the re-read table returned. In memory: persisted
+      * when later stages read it more than once (`reread`), otherwise passed
+      * through lazily. */
+    def keep(table: String, stage: String, reread: Boolean = false,
+        partitionBy: Seq[String] = Nil)(body: => DataFrame): DataFrame =
+      tables.fold(if (reread) cache(body) else body)(
+        _.write(body, table, runId, stage, fp, partitionBy))
+
+    // ---- extract stage: fused map pass (E1-E3, R1-R4, D3, D6), run once ----
     // Cached as a DATAFRAME, not a typed Dataset: typed flatMap would
     // deserialize the whole DocOut row (including the fat scrape column)
     // in every consumer, while InMemoryRelation + Catalyst explode prunes
-    // each branch to exactly the columns it reads.
-    val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, cfg, dicts.wdDesc, idf = Some(dicts.idf))
-      .toDF()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // edges are persisted NARROW: the statistics passes scan them twice
-    val edges = docOut.select(explode(col("triples")).as("t")).select("t.*")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // each branch to exactly the columns it reads. With tables the cache
+    // feeds the two or three extract tables and is dropped once they are
+    // written. The link inputs are UNCACHED projections off it: the gated
+    // single-pass chain consumes them exactly once, so a second (entities)
+    // cache would only add a BlockManager round-trip — the round-2 scaling
+    // profile showed cache fill/read as the bound.
+    lazy val docOut = cache(KgExtract.run(spark, pages, dicts.aliases,
+      dicts.patterns, dicts.wdPartOf, cfg, dicts.wdDesc, idf = Some(dicts.idf))
+      .toDF())
+    lazy val (entityRows, scrapeRows) = linkInputs(docOut, cfg)
+    val entities = keep("kg_entities", "extract_entities")(entityRows)
+    // the statistics passes and the lineage read the edges more than once
+    val edges = keep("kg_edges", "extract_edges", reread = true,
+      partitionBy = Seq("inferred"))(
+      docOut.select(explode(col("triples")).as("t")).select("t.*"))
+    val scrapes =
+      if (!cfg.forceSaltedJoins) spark.emptyDataFrame
+      else keep("kg_scrapes", "extract_scrapes")(scrapeRows.get)
+    if (tables.nonEmpty) release()
 
     // ---- link stage: Wikipedia → Wikidata → DBpedia dictionary joins ----
-    // The link inputs are UNCACHED projections straight off the docOut
-    // cache: the gated single-pass chain consumes them exactly once, so a
-    // second (entities) cache would only add a BlockManager round-trip —
-    // the round-2 scaling profile showed cache fill/read as the bound.
+    // The plan is a lazy value: a done link stage builds no dictJoin gates,
+    // and the metrics stage forces it so its link_plan rows stay complete.
+    // What is kept is the FLAT link output, with the nested user shape
+    // assembled on top (Linking.linkFlat says why).
     val rec = new Linking.JoinRecorder
-    val (entities, scrapes) = linkInputs(docOut, cfg)
-    val prep = prepared.getOrElse(
-      Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd, dicts.dbp,
-        dicts.synonyms, cfg, rec))
-    // nodes are persisted: statistics runs several aggregates over them and
-    // must not re-execute the join chain per aggregate (runMaterialized's
-    // table write serves the same purpose). The cache holds the FLAT link
-    // output (Linking.linkFlat) with the nested user shape assembled on
-    // top: the in-memory cache prunes only top-level columns and stores
-    // structs as opaque blobs, so caching the nested shape made every
-    // statistics read decompress the full fat payload (measured 3-4×
-    // slower narrow fill at local[32]).
-    val flat = Linking.linkFlat(spark, entities, prep,
-      scrapes.getOrElse(spark.emptyDataFrame), cfg, rec)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = Linking.nest(flat)
+    lazy val linkPlan = Linking.linkFlat(spark, entities,
+      prepared.getOrElse(Linking.prepare(spark, dicts.wiki, dicts.redirects,
+        dicts.wd, dicts.dbp, dicts.synonyms, cfg, rec)),
+      scrapes, cfg, rec)
+    val nodes = Linking.nest(keep("kg_nodes", "link", reread = true)(linkPlan))
 
     // ---- canonicalize: connected components over alias/redirect edges ----
-    val components = ConnectedComponents.run(spark, ccInput(spark, dicts))
+    val components = keep("kg_components", "canonicalize")(
+      ConnectedComponents.run(spark, ccInput(spark, dicts)))
 
     // ---- statistics + lineage metrics ----
     // dictJoin path decisions (broadcast vs salted, with the size evidence)
     // are recorded at plan-construction time — surfaced as metric rows so
     // plan drift at scale is observable in the run output, not just in
     // executor logs
-    val (stats, statsCaches) = Statistics.computeTracked(spark, nodes, edges,
-      runId)
-    val metrics = stats.unionByName(joinDecisionRows(spark, runId, rec))
-
-    val cached = Seq(docOut, edges, flat) ++ statsCaches
-    Result(nodes, edges, components, metrics,
-      release = () => cached.foreach(_.unpersist()))
+    val metrics = keep("kg_metrics", "metrics") {
+      linkPlan // after a resumed link stage: records its decisions now
+      val (stats, statsCaches) = Statistics.computeTracked(spark, nodes, edges,
+        runId)
+      cached ++= statsCaches
+      stats.unionByName(partitionLineage(edges, runId))
+        .unionByName(joinDecisionRows(spark, runId, rec))
+    }
+    if (tables.nonEmpty) release()
+    Result(nodes, edges, components, metrics, release _)
   }
 
   private def joinDecisionRows(spark: SparkSession, runId: String,
@@ -182,6 +233,21 @@ object Pipeline {
     }.toDF()
   }
 
+  /** Per-partition lineage rows (north_rule): partition id → row count of
+    * the edges, recorded into the metrics. */
+  private def partitionLineage(edges: DataFrame, runId: String): DataFrame =
+    edges.select(spark_partition_id().as("pid"))
+      .groupBy("pid").agg(count(lit(1)).as("rows"))
+      .select(lit(runId).as("run_id"), lit("extract_edges").as("stage"),
+        lit("partition_rows").as("metric"), col("pid").cast("string").as("key"),
+        col("rows").cast("double").as("value"))
+
+  /** On-disk table layout, folded into the resume fingerprint: a root
+    * written in another layout must be recomputed, not read. Untagged
+    * fingerprints are the layout with a NESTED kg_nodes table; `layout=2`
+    * keeps kg_nodes flat. Bump it whenever a table's schema changes. */
+  private val TableLayout = "layout=2"
+
   /** Input fingerprint WITHOUT scanning the data (north_rule snapshot-based
     * resume): hash of the sorted input file listing when the input is
     * file-backed (the Iceberg-snapshot-id stand-in); otherwise a hash of
@@ -189,11 +255,11 @@ object Pipeline {
     * complete extra pass over the corpus — at 10^12 rows, a full scan spent
     * only on naming the run. The scrape-placement REGIME (broadcast:
     * p_extract carried on kg_entities, no kg_scrapes table; salted: narrow
-    * kg_entities + kg_scrapes) is folded in too: the regimes write
-    * different kg_entities schemas, so a config flip must invalidate the
-    * extract stages instead of resuming into a mismatched layout (the L5
-    * compat join would otherwise hit a missing p_url column, or silently
-    * reuse the other regime's layout). */
+    * kg_entities + kg_scrapes) and the [[TableLayout]] are folded in too:
+    * both change what a table holds, so a flip must invalidate the stages
+    * instead of resuming into a mismatched layout (the L5 compat join would
+    * otherwise hit a missing p_url column, or `nest` a missing flat
+    * column). */
   private def fingerprintOf(pages: Dataset[PageRow], cfg: KgConfig): String = {
     val files = pages.inputFiles
     val src = if (files.nonEmpty) files.sorted.mkString("\n")
@@ -201,52 +267,6 @@ object Pipeline {
     val md = java.security.MessageDigest.getInstance("SHA-1")
     val regime = if (cfg.forceSaltedJoins) "salted" else "carry"
     "in=" + md.digest(src.getBytes("UTF-8")).take(8)
-      .map(b => f"${b & 0xff}%02x").mkString + s"+$regime"
-  }
-
-  /** Materializing run with snapshot/resume (SURVEY §7.4): each stage writes
-    * parquet + manifest; a rerun with the same runId skips completed stages. */
-  def runMaterialized(
-      spark: SparkSession,
-      pages: Dataset[PageRow],
-      dicts: Dicts,
-      tables: KgTables,
-      cfg: KgConfig = KgConfig.default,
-      runId: String = "run1"): Result = {
-    import spark.implicits._
-    val fp = fingerprintOf(pages, cfg)
-
-    val docOut = KgExtract.run(spark, pages, dicts.aliases, dicts.patterns,
-      dicts.wdPartOf, cfg, dicts.wdDesc, idf = Some(dicts.idf))
-    // scrape placement as in run (see linkInputs): the broadcast regime
-    // writes no kg_scrapes table — one fewer full-corpus-width stage write
-    // AND one fewer extract pass over the html
-    val (entityRows, scrapeRows) = linkInputs(docOut.toDF(), cfg)
-    val entities = tables.write(entityRows,
-      "kg_entities", runId, "extract_entities", fp)
-    val edgesRaw = tables.write(docOut.flatMap(_.triples).toDF(), "kg_edges",
-      runId, "extract_edges", fp, partitionBy = Seq("inferred"))
-    val scrapes = scrapeRows.fold(spark.emptyDataFrame)(
-      tables.write(_, "kg_scrapes", runId, "extract_scrapes", fp))
-
-    val rec = new Linking.JoinRecorder
-    val nodes = tables.write(
-      Linking.linkAll(spark, entities,
-        Linking.prepare(spark, dicts.wiki, dicts.redirects, dicts.wd,
-          dicts.dbp, dicts.synonyms, cfg, rec),
-        scrapes, cfg, rec),
-      "kg_nodes", runId, "link", fp)
-
-    val components = tables.write(
-      ConnectedComponents.run(spark, ccInput(spark, dicts)),
-      "kg_components", runId, "canonicalize", fp)
-
-    val metrics = tables.write(
-      Statistics.compute(spark, nodes, edgesRaw, runId)
-        .unionByName(tables.partitionLineage(edgesRaw, runId, "extract_edges"))
-        .unionByName(joinDecisionRows(spark, runId, rec)),
-      "kg_metrics", runId, "metrics", fp)
-
-    Result(nodes, edgesRaw, components, metrics)
+      .map(b => f"${b & 0xff}%02x").mkString + s"+$regime+$TableLayout"
   }
 }

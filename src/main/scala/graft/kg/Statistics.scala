@@ -25,24 +25,20 @@ import org.apache.spark.sql.functions._
   * The round-1 version ran ~9 separate branch scans and round-3 still ran
   * four (the per-subtree driver scheduling + AQE re-planning was the
   * measured thread-invariant ~4-8 s floor that capped 8→32 scaling).
-  * The caller is expected to have `nodesFull` persisted.
+  * The caller is expected to have `nodesFull` persisted or table-backed.
   */
 object Statistics {
 
-  def compute(spark: SparkSession, nodesFull: DataFrame, edges: DataFrame,
-      runId: String): DataFrame =
-    computeTracked(spark, nodesFull, edges, runId)._1
-
-  /** Like [[compute]], but also returns the plans this call PERSISTED
-    * (the tiny grouped counter table), so the caller can unpersist them
-    * once the metrics are materialized — compute() itself cannot: the
-    * returned plan is lazy and the cache exists precisely to serve its
-    * eventual execution. Callers that invoke compute repeatedly in one
-    * session (bench reps, per-query oracles) must release, or each call
-    * leaks its cache for the session lifetime. The node projection is NOT
-    * persisted: only one pass (counters) reads the fat array columns, so
-    * re-encoding them into a second cache costs more than the single
-    * pruned read of the caller's node cache or parquet it saves. */
+  /** The metrics plan plus the plans this call PERSISTED (the tiny grouped
+    * counter table), so the caller can unpersist them once the metrics are
+    * materialized — the returned plan is lazy and the cache exists
+    * precisely to serve its eventual execution. Callers that compute
+    * repeatedly in one session (bench reps, per-query oracles) must
+    * release, or each call leaks its cache for the session lifetime. The
+    * node projection is NOT persisted: only one pass (counters) reads the
+    * fat array columns, so re-encoding them into a second cache costs more
+    * than the single pruned read of the caller's node cache or parquet it
+    * saves. */
   def computeTracked(spark: SparkSession, nodesFull: DataFrame,
       edges: DataFrame, runId: String): (DataFrame, Seq[DataFrame]) = {
 

@@ -156,7 +156,7 @@ object LinkOps {
       .orderBy("url", "entity")
   }
 
-  /** A1-A10 statistics (the REAL Statistics.compute pass structure) over
+  /** A1-A10 statistics (the REAL Statistics.computeTracked pass structure) over
     * the link-chain fixture nodes — every metric row is hand-derivable
     * from per-term mention counts over the documents table, giving the
     * statistics stage a driver oracle that shares NO code with the engine

@@ -43,8 +43,8 @@ class CacheLayoutSpec extends SparkSpec {
   }
 
   test("the statistics metrics plan itself never scans the fat columns") {
-    val metricsOverNodes = Statistics.compute(
-      spark, result.nodes, result.edges, "probe")
+    val metricsOverNodes = Statistics.computeTracked(
+      spark, result.nodes, result.edges, "probe")._1
     val out = imrScanOutputs(metricsOverNodes)
     for (fat <- Seq("wiki_extract", "wiki_multilang", "dbp_abstract", "wd_descriptions"))
       assert(!out.contains(fat),

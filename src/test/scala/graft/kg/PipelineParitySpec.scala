@@ -1,6 +1,6 @@
 package graft.kg
 
-import graft.SparkSpec
+import graft.{JobLog, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** The parity gate (north_rule): pipeline triples vs the independent
@@ -50,6 +50,7 @@ class PipelineParitySpec extends SparkSpec {
     assert(e1 == e2, "edge parity broadcast vs salted")
   }
 
+  // compares whole node rows and the partition lineage too
   test("run and runMaterialized agree on edges, node keys and statistics in both regimes") {
     val small = SyntheticCorpus.generate(nPages = 60, seed = 42L)
     val pages = spark.createDataset(small.pages).repartition(4)
@@ -58,15 +59,14 @@ class PipelineParitySpec extends SparkSpec {
       .select("url", "subject", "predicate", "object", "inferred", "subject_id")
       .as[(String, String, String, String, String, String)].collect().toSeq
       .sortBy(_.toString)
-    def nodes(r: Pipeline.Result) = r.nodes.select(
-      $"url", $"entity", $"sources.wikipedia.status", $"sources.wikidata.status",
-      $"sources.dbpedia.status", $"sources.wikipedia.fallback_source",
-      $"sources.dbpedia.fallback_source")
-      .as[(String, String, String, String, String, String, String)].collect().toSeq
-      .sortBy(_.toString)
+    def nodes(r: Pipeline.Result) = r.nodes.select(to_json(struct(col("*"))))
+      .as[String].collect().toSeq.sorted
     def stats(r: Pipeline.Result) = r.metrics.filter($"stage" === "stats")
       .select("metric", "key", "value").as[(String, String, Double)].collect().toSeq
       .sortBy(_.toString)
+    def lineageRows(r: Pipeline.Result) = r.metrics
+      .filter($"metric" === "partition_rows").agg(count(lit(1)), sum("value"))
+      .as[(Long, Option[Double])].head()
     for (regime <- Seq(cfg, cfg.copy(forceSaltedJoins = true, nSalt = 4))) {
       val name = if (regime.forceSaltedJoins) "salted" else "broadcast"
       val mem = Pipeline.run(spark, pages, dicts, regime)
@@ -76,9 +76,32 @@ class PipelineParitySpec extends SparkSpec {
       val memEdges = edges(mem)
       assert(memEdges.nonEmpty)
       assert(edges(mat) == memEdges, s"edges differ between run modes ($name)")
-      assert(nodes(mat) == nodes(mem), s"node keys differ between run modes ($name)")
+      assert(nodes(mat) == nodes(mem), s"node rows differ between run modes ($name)")
       assert(stats(mat) == stats(mem), s"stats rows differ between run modes ($name)")
+      for ((mode, r) <- Seq("run" -> mem, "runMaterialized" -> mat)) {
+        val (n, total) = lineageRows(r)
+        assert(n > 0, s"$mode wrote no partition lineage ($name)")
+        assert(total.contains(memEdges.size.toDouble),
+          s"$mode lineage sums to $total, not ${memEdges.size} edges ($name)")
+      }
       mem.release()
+    }
+  }
+
+  test("runMaterialized runs the extract pass once per page in both regimes") {
+    val small = SyntheticCorpus.generate(nPages = 40, seed = 5L)
+    val pages = spark.createDataset(small.pages).repartition(4)
+    val dicts = Pipeline.dictsFromCorpus(spark, small)
+    for (regime <- Seq(cfg, cfg.copy(forceSaltedJoins = true, nSalt = 4))) {
+      val tables = new KgTables(spark,
+        java.nio.file.Files.createTempDirectory("kg_extract_once").toString)
+      val (_, log) = JobLog.during(spark) {
+        val r = Pipeline.runMaterialized(spark, pages, dicts, tables, regime)
+        Seq(r.edges, r.nodes, r.components, r.metrics).foreach(_.count())
+      }
+      assert(log.pagesProcessed == small.pages.size,
+        s"extract processed ${log.pagesProcessed} pages for ${small.pages.size} " +
+          s"(forceSaltedJoins=${regime.forceSaltedJoins})")
     }
   }
 
